@@ -238,8 +238,9 @@ object Components {
     * exact-integer recurrence as [[pageRank]] with the base term
     * gated per node: `r' = ((1000−d)·base·[v∈seeds] + d·Σ r/outdeg)
     * div 1000`, `base = 1e6 div |seeds∩nodes|`. Seeds outside the
-    * graph are ignored; a seed set disjoint from the graph raises
-    * (div-by-zero — loud, never a silent all-zero ranking). */
+    * graph are ignored; a seed set disjoint from a non-empty graph
+    * fails a `require` (loud, never a silent all-zero ranking). An
+    * empty graph ranks no node, with or without seeds. */
   def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
                            seeds: DataFrame, seedCol: String,
                            iters: Int, dampingPermille: Int = 850): DataFrame =
@@ -284,9 +285,10 @@ object Components {
     // over the node-sized checkpoint, held on the driver like the
     // k-means centroids — embedding it as a literal removes the
     // 1-row aggregate+broadcast subtree the lazy plan otherwise
-    // re-evaluated once per iteration (2 Exchanges each). A disjoint
-    // seed set makes the count 0 and the integral divide raises
-    // loudly before any iteration runs.
+    // re-evaluated once per iteration (2 Exchanges each). The count
+    // is NULL on an empty graph (sum over zero rows), which ranks no
+    // node; a disjoint seed set makes it 0 and fails on the driver
+    // before any iteration runs, whatever the session's ANSI mode.
     //
     // All arithmetic is BIGINT, and that is EXACT, not approximate:
     // the initial total rank mass is N·(10⁶ div N) ≤ 10⁶, and every
@@ -298,9 +300,12 @@ object Components {
     // magnitude under 2⁶³. BIGINT stays inside whole-stage codegen
     // where DECIMAL(38,0) falls out to BigDecimal ops — a measured
     // ~2× cut on the q205 supplier-part graph at the gate config.
-    val base: Long = nodes.agg(sum(col("__seed")).as("__n"))
-      .select(expr("1000000L div __n").as("__base"))
-      .head().getLong(0)
+    val n: java.lang.Long = nodes.agg(sum(col("__seed")))
+      .head().getAs[java.lang.Long](0)
+    if (n == null)
+      return nodes.select(col("node"), lit(0L).as("rank_ppm"))
+    require(n > 0, "seed set is disjoint from the graph")
+    val base: Long = 1000000L / n
     // Edges with their source degree attached, ONCE — static across
     // rounds, so each round is a single edge⨝ranks join + one
     // destination-keyed sum, not two big joins. Materialized

@@ -215,21 +215,34 @@ object DeltaWriter {
   private def canonical(st: StructType): Seq[(String, DataType)] =
     st.fields.map(f => f.name -> normalizeType(f.dataType)).toSeq
 
+  /** Statistics JSON for the `add` action of each of `files`, in
+    * order ([[statsJson]]). The footer read options are built once for
+    * the whole batch: the no-options `ParquetFileReader.open` builds a
+    * fresh Hadoop `Configuration` per file and re-parses the default
+    * resources each time, which costs far more than reading a small
+    * file's footer. */
+  private def fileStats(fs: FileSystem, files: Seq[Path],
+                        schema: StructType): Seq[Option[String]] = {
+    val options = org.apache.parquet.HadoopReadOptions.builder(fs.getConf).build()
+    files.map(statsJson(fs, _, schema, options))
+  }
+
   /** Per-file statistics JSON for an `add` action — Delta's
     * data-skipping contract (`numRecords` / `minValues` / `maxValues`
     * / `nullCount`), derived from the landed file's PARQUET FOOTER
     * (row-group statistics aggregated across blocks): no data pages
     * are read, the cost is one footer fetch per new file — the same
-    * metadata class as the listing diff that found it. Columns whose
+    * metadata class as the listing that found it. Columns whose
     * footer stats are absent/unusable (NaN floats, exotic physical
     * encodings) are simply omitted — readers treat a missing bound as
     * unprunable, so omission is always sound. */
-  private def statsJson(fs: FileSystem, p: Path,
-                        schema: StructType): Option[String] = try {
+  private def statsJson(fs: FileSystem, p: Path, schema: StructType,
+                        options: org.apache.parquet.ParquetReadOptions)
+      : Option[String] = try {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(p, fs.getConf))
+      HadoopInputFile.fromPath(p, fs.getConf), options)
     val blocks = try {
       import scala.jdk.CollectionConverters._
       reader.getFooter.getBlocks.asScala.toSeq
@@ -526,8 +539,8 @@ object DeltaWriter {
     val newFiles = landFiles(fs, qualifiedBase, cleanUrl, df,
       partitionColumns, physW,
       snapGen.map(physTypesFor).getOrElse(Map.empty) ++ allocPhysTypes)
-    val fileStats: Seq[Option[String]] =
-      newFiles.map { case (_, p) => statsJson(fs, p, statsSchema) }
+    val newStats: Seq[Option[String]] =
+      fileStats(fs, newFiles.map(_._2), statsSchema)
 
     // table-relative, RFC-2396-percent-encoded — the form the log
     // stores and [[DeltaReader]] decodes; removes must re-encode the
@@ -535,10 +548,10 @@ object DeltaWriter {
     // they tombstone
     val basePath = qualifiedBase.toUri.getPath.stripSuffix("/")
     def relEncoded(p: Path): String = relEncode(basePath, p)
-    val adds = newFiles.zip(fileStats).map { case ((kvs, p), st) =>
+    val adds = newFiles.zip(newStats).map { case ((kvs, p), st) =>
       newFileAddLine(fs, p, relEncoded(p), kvs, dataChange = true, st) }
     // row-tracking stamping input, resolved once (not per retry)
-    lazy val writeRecCounts: Seq[Long] = newFiles.zip(fileStats)
+    lazy val writeRecCounts: Seq[Long] = newFiles.zip(newStats)
       .map { case ((_, p), st) => numRecordsOf(st, p) }
 
     // identity high-watermark bookkeeping: the landed files' footer
@@ -553,7 +566,7 @@ object DeltaWriter {
         val statKey = physW.get(sp.name).map(_._1).getOrElse(sp.name)
         val om = new com.fasterxml.jackson.databind.ObjectMapper()
         val section = if (sp.step > 0) "maxValues" else "minValues"
-        val perFile: Seq[Option[Long]] = fileStats.map(_.flatMap { s =>
+        val perFile: Seq[Option[Long]] = newStats.map(_.flatMap { s =>
           scala.util.Try(om.readTree(s)).toOption
             .flatMap(n => Option(n.get(section)))
             .flatMap(n => Option(n.get(statKey)))
@@ -1321,8 +1334,8 @@ object DeltaWriter {
         s""""pathOrInlineDv":"${d._1}","offset":1,"sizeInBytes":${d._2},""" +
         s""""cardinality":${d._3}}$stats${rowIdCarry(f)}}}"""
     }
-    val newStats: Seq[Option[String]] = newFiles.map { case (_, p) =>
-      statsJson(fs, p, snap.physicalSchema.getOrElse(snap.schema)) }
+    val newStats: Seq[Option[String]] = fileStats(fs, newFiles.map(_._2),
+      snap.physicalSchema.getOrElse(snap.schema))
     val newAdds = newFiles.zip(newStats).map { case ((kvs, p), st) =>
       newFileAddLine(fs, p, relEncode(basePath, p), kvs, dataChange = true,
         st) }
@@ -1483,8 +1496,8 @@ object DeltaWriter {
     def relOrAbs(p: Path): String =
       if (p.toUri.getPath.startsWith(basePath + "/")) relEncode(basePath, p)
       else p.toUri.toString
-    val newStats: Seq[Option[String]] = newFiles.map { case (_, p) =>
-      statsJson(fs, p, snap.physicalSchema.getOrElse(snap.schema)) }
+    val newStats: Seq[Option[String]] = fileStats(fs, newFiles.map(_._2),
+      snap.physicalSchema.getOrElse(snap.schema))
     val adds = newFiles.zip(newStats).map { case ((kvs, p), st) =>
       newFileAddLine(fs, p, relOrAbs(p), kvs, dataChange = false, st) }
     // record counts for row-tracking stamping: resolved ONCE (stats
@@ -1586,8 +1599,8 @@ object DeltaWriter {
       landFiles(fs, qualifiedBase, cleanUrl, packed,
         snap.partitionColumns, physC, physTypesFor(snap))
     }
-    val newStats: Seq[Option[String]] = newFiles.map { case (_, p) =>
-      statsJson(fs, p, snap.physicalSchema.getOrElse(snap.schema)) }
+    val newStats: Seq[Option[String]] = fileStats(fs, newFiles.map(_._2),
+      snap.physicalSchema.getOrElse(snap.schema))
     val adds = newFiles.zip(newStats).map { case ((kvs, p), st) =>
       newFileAddLine(fs, p, relOrAbs(p), kvs, dataChange = false, st) }
     // record counts for row-tracking stamping: resolved ONCE (stats
@@ -1747,8 +1760,8 @@ object DeltaWriter {
       else p.toUri.toString
     val newFiles = landFiles(fs, qualifiedBase, cleanUrl, clustered,
       pcols, physZ, physTypesFor(snap))
-    val newStats: Seq[Option[String]] = newFiles.map { case (_, p) =>
-      statsJson(fs, p, snap.physicalSchema.getOrElse(snap.schema)) }
+    val newStats: Seq[Option[String]] = fileStats(fs, newFiles.map(_._2),
+      snap.physicalSchema.getOrElse(snap.schema))
     val adds = newFiles.zip(newStats).map { case ((kvs, p), st) =>
       newFileAddLine(fs, p, relOrAbs(p), kvs, dataChange = false, st) }
     // record counts for row-tracking stamping: resolved ONCE (stats
@@ -1921,9 +1934,10 @@ object DeltaWriter {
       partitionColumns.map(c => StructField(c,
         partitionTypes.getOrElse(c, StringType), nullable = true)))
     val basePath = qualifiedBase.toUri.getPath.stripSuffix("/")
-    val adds = found.sortBy(_._1.toString).map { case (p, pv) =>
-      newFileAddLine(fs, p, relEncode(basePath, p), pv, dataChange = true,
-        statsJson(fs, p, dataSchema))
+    val sorted = found.sortBy(_._1.toString)
+    val adds = sorted.zip(fileStats(fs, sorted.map(_._1), dataSchema)).map {
+      case ((p, pv), st) =>
+        newFileAddLine(fs, p, relEncode(basePath, p), pv, dataChange = true, st)
     }
     val lines = Seq(
       """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
@@ -3241,6 +3255,23 @@ object DeltaWriter {
       }.toMap
     }.getOrElse(Map.empty)
 
+  /** Land `df` as parquet data files of the table at `qualifiedBase`:
+    * ONE distributed write into a PRIVATE staging directory
+    * ([[StagedWrite]]), then a per-file rename into place. Returns each
+    * new file with its (physical) partition values, which come from
+    * the staging listing, where null, empty and path-escaped values
+    * are rejected before any file moves — the write is the only Spark
+    * job, with no partition pre-pass over `df`.
+    *
+    * Writing straight into the table dir would share Spark's
+    * `_temporary/<jobAttempt>` staging between CONCURRENT writers of
+    * the same table — one job's commit/abort deletes the other's
+    * in-flight task files (the classic FileOutputCommitter collision;
+    * delta-spark sidesteps it the same way, by never letting the
+    * committer own the table dir). The staging name carries no leading
+    * `_`/`.` on purpose: readers only ever open files the log names,
+    * and a crash-orphaned staging tree must stay VISIBLE to vacuum's
+    * walk so it ages out. */
   private def landFiles(fs: FileSystem, qualifiedBase: Path, cleanUrl: String,
                         df: DataFrame, partitionColumns: Seq[String],
                         phys: Map[String, (String, Option[Long])] = Map.empty,
@@ -3252,23 +3283,6 @@ object DeltaWriter {
     // additionally carry parquet field ids, attached here as
     // parquet.field.id metadata the Spark writer honors
     def physName(c: String): String = phys.get(c).map(_._1).getOrElse(c)
-    val touched: Seq[(Seq[(String, String)], Path)] =
-      if (partitionColumns.isEmpty) Seq((Seq.empty, qualifiedBase))
-      else df.select(partitionColumns.map(c => col(c).cast("string")): _*)
-        .distinct().collect().toSeq.map { r =>
-          val kvs = partitionColumns.zipWithIndex.map { case (c, i) =>
-            require(!r.isNullAt(i),
-              s"DeltaWriter: partition column '$c' contains null values")
-            val v = r.getString(i)
-            require(v.nonEmpty && ExternalCatalogUtils.escapePathName(v) == v,
-              s"DeltaWriter: partition column '$c' value '$v' is empty or " +
-                "contains characters Spark path-escapes; only path-literal " +
-                "partition values are supported")
-            physName(c) -> v
-          }
-          (kvs, kvs.foldLeft(qualifiedBase) { case (p, (c, v)) =>
-            new Path(p, s"$c=$v") })
-        }
     // nested mapped columns cast to their PHYSICAL type first: the
     // positional struct cast renames inner fields (the inverse of the
     // reader's physical→logical cast), and in id mode the target
@@ -3286,46 +3300,26 @@ object DeltaWriter {
           case None => col(c)
         }
       }.toSeq: _*)
-    val physPartitionCols = partitionColumns.map(physName)
 
-    // ONE distributed write into a PRIVATE staging directory, then a
-    // per-file rename into place. Writing straight into the table dir
-    // would share Spark's `_temporary/<jobAttempt>` staging between
-    // CONCURRENT writers of the same table — one job's commit/abort
-    // deletes the other's in-flight task files (the classic
-    // FileOutputCommitter collision; delta-spark sidesteps it the
-    // same way, by never letting the committer own the table dir).
-    // The staging name carries no leading `_`/`.` on purpose: readers
-    // only ever open files the log names, and a crash-orphaned
-    // staging tree must stay VISIBLE to vacuum's walk so it ages out.
     val staging = new Path(qualifiedBase,
       s"staging-${java.util.UUID.randomUUID}")
-    val writer = dfPhys.write.mode("append").option("compression", "snappy")
-    (if (physPartitionCols.nonEmpty)
-      writer.partitionBy(physPartitionCols: _*)
-     else writer).parquet(staging.toString)
-
-    val newFiles: Seq[(Seq[(String, String)], Path)] = touched.flatMap {
-      case (kvs, finalDir) =>
-        val stagedDir = kvs.foldLeft(staging) { case (p, (c, v)) =>
+    val newFiles = StagedWrite.land(fs, staging, dfPhys,
+      partitionColumns.map(physName), Map("compression" -> "snappy"),
+      who = "DeltaWriter") { staged =>
+      staged.flatMap { case (kvs, files) =>
+        val finalDir = kvs.foldLeft(qualifiedBase) { case (p, (c, v)) =>
           new Path(p, s"$c=$v") }
-        if (!fs.exists(stagedDir)) Seq.empty
-        else {
-          fs.mkdirs(finalDir)
-          fs.listStatus(stagedDir)
-            .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-            .sortBy(_.getPath.getName)
-            .map { st =>
-              val dest = new Path(finalDir, st.getPath.getName)
-              // task-UUID part names cannot collide across writers
-              require(fs.rename(st.getPath, dest),
-                s"DeltaWriter: could not move staged file ${st.getPath} " +
-                  s"into $finalDir")
-              (kvs, dest)
-            }
+        fs.mkdirs(finalDir)
+        files.map { st =>
+          val dest = new Path(finalDir, st.getPath.getName)
+          // task-UUID part names cannot collide across writers
+          require(fs.rename(st.getPath, dest),
+            s"DeltaWriter: could not move staged file ${st.getPath} " +
+              s"into $finalDir")
+          (kvs, dest)
         }
+      }
     }
-    fs.delete(staging, true)
     require(newFiles.nonEmpty || df.isEmpty,
       "DeltaWriter: write produced no files (concurrent compaction?)")
     newFiles

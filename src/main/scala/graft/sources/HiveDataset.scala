@@ -2,7 +2,6 @@ package graft.sources
 
 import graft.util.PathUtils
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.StringType
@@ -45,10 +44,13 @@ import scala.collection.immutable.ListMap
   * parquet read — Catalyst partition pruning, predicate pushdown and
   * column pruning all apply downstream; `readPartition` constructs the
   * single partition directory path, so it is one directory listing no
-  * matter how many partitions exist; writes fan out on executors via
-  * FileFormatWriter (no driver-side data movement). The only
-  * driver-side metadata operation is partition discovery, which lists
-  * directories, not files.
+  * matter how many partitions exist. A write or append is ONE Spark
+  * job: the data fans out on executors via FileFormatWriter into a
+  * private `_staging-<uuid>` directory, and the driver then lists the
+  * staged directories (which name the touched partitions) and moves
+  * each new file into place. Driver-side metadata work is
+  * proportional to the files written, never to dataset age, and no
+  * data moves through the driver.
   */
 case class HiveDataset(
     url: String,
@@ -146,15 +148,13 @@ case class HiveDataset(
 
   private def reader() = spark.read.option("mergeSchema", "true")
 
+  /** Whether `dir` holds a parquet file that a Spark read would see:
+    * hidden names (write staging, Spark's own markers) are skipped. */
   private def hasParquetFiles(dir: Path): Boolean =
-    fs.exists(dir) && {
-      val it = fs.listFiles(dir, true)
-      var found = false
-      while (!found && it.hasNext) {
-        val f = it.next()
-        if (f.getPath.getName.endsWith(".parquet")) found = true
-      }
-      found
+    fs.exists(dir) && fs.listStatus(dir).exists { st =>
+      val name = st.getPath.getName
+      !StagedWrite.hidden(name) &&
+        (if (st.isDirectory) hasParquetFiles(st.getPath) else name.endsWith(".parquet"))
     }
 
   /** Data columns alphabetically, then partition columns in declared
@@ -173,131 +173,89 @@ case class HiveDataset(
   /** Dynamic partition overwrite: replaces exactly the partitions
     * present in `df`; other partitions survive (hive_dataset.py:
     * 412-415). */
-  override def write(df: DataFrame): Unit = writeMode(df, "overwrite")
+  override def write(df: DataFrame): Unit = writeMode(df, overwrite = true)
 
   /** Append fragments to existing partitions (hive_dataset.py:
     * 417-420). */
-  override def append(df: DataFrame): Unit = writeMode(df, "append")
+  override def append(df: DataFrame): Unit = writeMode(df, overwrite = false)
 
-  private def writeMode(df: DataFrame, mode: String): Unit = {
+  /** One distributed write into a private `_staging-<uuid>` directory
+    * under the dataset (the `_` prefix hides it from every Spark read
+    * and from [[hasParquetFiles]]), then a move of each staged file
+    * into its partition under a reference-style fragment name
+    * (`NNNNNN_<uuid>.parquet`, hive_dataset.py:51-70, 232-245). The
+    * touched partitions come from the staging listing, where their
+    * values are validated before any file moves ([[StagedWrite]]);
+    * the write is the only Spark job, and `df` is evaluated once.
+    *
+    * `append` continues the index from the partition's highest
+    * surviving fragment, so fragments appended later always sort
+    * lexically after earlier ones, the reference's ordering contract
+    * (README.md:35-37). `write` is a dynamic partition overwrite: it
+    * deletes the touched partition's old fragments and restarts at
+    * 000000; untouched partitions survive.
+    *
+    * Cost model: one listing per staged directory, plus one listing
+    * and one rename per new file in each TOUCHED partition — metadata
+    * cost proportional to the write, not to dataset age; nothing is
+    * read or rewritten. A crash before the moves leaves an orphaned
+    * `_staging-*` tree that no read sees. */
+  private def writeMode(df: DataFrame, overwrite: Boolean): Unit = {
     validate(df)
-    // The partitions this write touches, computed from the frame
-    // BEFORE writing: bounded by partition cardinality (the same
-    // driver-side metadata class as the reference's partition
-    // handling, hive_dataset.py:389). The fragment-rename pass then
-    // lists ONLY these directories — metadata cost proportional to
-    // the write, not to dataset age. (The projection evaluates `df`
-    // once before the write does — persist expensive upstream frames
-    // if that matters; the reference evaluates its input eagerly too.)
-    val touched: Seq[Path] =
-      if (partitionColumns.isEmpty) Seq(qualifiedBase)
-      else df.select(partitionColumns.map(col): _*).distinct().collect().toSeq
-        .map { r =>
-          partitionColumns.zipWithIndex.foreach { case (c, i) =>
-            // Null AND empty-string partition values both land in
-            // Spark's __HIVE_DEFAULT_PARTITION__ directory, outside
-            // this dataset's k=v partition contract — reject loudly.
-            require(!r.isNullAt(i), s"Partition column '$c' contains null values")
-            val v = r.getString(i)
-            require(v.nonEmpty,
-              s"Partition column '$c' contains empty-string values " +
-                "(Spark writes these to __HIVE_DEFAULT_PARTITION__, outside the k=v layout)")
-            // Spark path-escapes characters like '=', '%', '/', and
-            // control chars when writing partition directories; the
-            // raw k=v paths this dataset reads/renames/deletes by
-            // would then miss the directories Spark actually wrote —
-            // a silent ordering/pruning corruption. Fail instead:
-            // the reference's raw-path layout (hive_dataset.py:
-            // 130-132) has no escaping either.
-            require(ExternalCatalogUtils.escapePathName(v) == v,
-              s"Partition column '$c' value '$v' contains characters Spark path-escapes; " +
-                "only path-literal partition values are supported")
-          }
-          new Path(qualifiedBase, PathUtils.partitionPath(
-            partitionColumns.zipWithIndex.map { case (c, i) => c -> r.getString(i) }))
-        }
-    repairStrandedFragments(touched)
-    val before = listParquet(touched)
     val dataCols = (df.columns.toSet -- partitionColumns).toSeq.sorted
     val projected = df.select((dataCols ++ partitionColumns).map(col): _*)
-    val writer = projected.write
-      .mode(mode)
-      .option("compression", compression)
-      .option("maxRecordsPerFile", maxRowsPerFragment)
-      // Overwrite only touched partitions regardless of session conf.
-      .option("partitionOverwriteMode", "dynamic")
-    (if (partitionColumns.nonEmpty) writer.partitionBy(partitionColumns: _*) else writer)
-      .parquet(cleanUrl)
-    renameNewFragments(touched, before)
+    val staging = new Path(qualifiedBase, s"_staging-${java.util.UUID.randomUUID}")
+    StagedWrite.land(fs, staging, projected, partitionColumns,
+      Map("compression" -> compression, "maxRecordsPerFile" -> maxRowsPerFragment.toString),
+      who = "") { staged =>
+      staged.foreach { case (kvs, files) =>
+        val dir =
+          if (partitionColumns.isEmpty) qualifiedBase
+          else new Path(qualifiedBase, PathUtils.partitionPath(kvs))
+        var idx =
+          if (overwrite) {
+            listParquet(dir).map(new Path(dir, _)).foreach(old =>
+              require(fs.delete(old, false), s"failed to delete replaced fragment $old"))
+            0
+          } else repairStrandedFragments(dir)
+        fs.mkdirs(dir)
+        files.foreach { st =>
+          val to = new Path(dir, PathUtils.fragmentName(idx))
+          require(fs.rename(st.getPath, to), s"failed to move fragment ${st.getPath} to $to")
+          idx += 1
+        }
+      }
+    }
   }
 
-  /** Parquet file names in each of `dirs` (fragments are direct
-    * children of a partition directory — one non-recursive listing
-    * per touched partition). */
-  private def listParquet(dirs: Seq[Path]): Map[String, Set[String]] =
-    dirs.flatMap { d =>
-      if (!fs.exists(d)) None
-      else Some(d.toString -> fs.listStatus(d)
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath.getName).toSet)
-    }.toMap
+  /** Parquet file names directly in `dir` (fragments are direct
+    * children of a partition directory); empty when `dir` is absent. */
+  private def listParquet(dir: Path): Seq[String] =
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir)
+      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+      .map(_.getPath.getName).toSeq
 
-  /** Rename the part-files a write just produced to reference-style
-    * fragment names (`NNNNNN_<uuid>.parquet`, hive_dataset.py:51-70,
-    * 232-245), with the index continuing from the partition's highest
-    * surviving fragment — so fragments appended later always sort
-    * lexically after earlier ones, the reference's ordering contract
-    * (README.md:35-37). Dynamic overwrite clears the partition's old
-    * files first, so rewritten partitions restart at 000000.
-    *
-    * Cost model: one rename per NEW file plus one listing per TOUCHED
-    * partition — the same metadata-op order as the file-commit
-    * protocol that just ran; nothing is read or rewritten. */
-  private def renameNewFragments(dirs: Seq[Path],
-                                 before: Map[String, Set[String]]): Unit =
-    listParquet(dirs).foreach { case (dir, files) =>
-      val old = before.getOrElse(dir, Set.empty)
-      // Spark part-file names encode task order; sorting keeps index
-      // assignment deterministic per write.
-      val fresh = files.diff(old).toSeq.sorted
-      if (fresh.nonEmpty) {
-        var idx = (files.intersect(old))
-          .filter(PathUtils.isFragmentName)
-          .map(PathUtils.fragmentIndex)
-          .foldLeft(-1)(math.max) + 1
-        fresh.foreach { name =>
-          val (from, to) = (new Path(dir, name), new Path(dir, PathUtils.fragmentName(idx)))
-          // A silently failed rename would strand a part-* name that
-          // later appends sort BEFORE, breaking the ordering contract.
-          require(fs.rename(from, to), s"failed to rename fragment $from to $to")
-          idx += 1
-        }
-      }
+  /** Repair legacy fragments stranded by an interrupted write of an
+    * older layout, which committed Spark `part-*` files straight into
+    * the partition and renamed them afterwards. A crash in between left
+    * `part-*` names, which sort AFTER every numeric fragment (letters >
+    * digits). They are renamed into the fragment sequence, continuing
+    * from the highest surviving index, ahead of this write's new files
+    * (they committed earlier, so they keep the earlier positions).
+    * Returns the next free fragment index of `dir`. */
+  private def repairStrandedFragments(dir: Path): Int = {
+    val files = listParquet(dir)
+    var idx = files.filter(PathUtils.isFragmentName)
+      .map(PathUtils.fragmentIndex)
+      .foldLeft(-1)(math.max) + 1
+    files.filterNot(PathUtils.isFragmentName).sorted.foreach { name =>
+      val (from, to) = (new Path(dir, name), new Path(dir, PathUtils.fragmentName(idx)))
+      require(fs.rename(from, to), s"failed to repair stranded fragment $from to $to")
+      idx += 1
     }
-
-  /** Repair fragments stranded by a previous interrupted write: a
-    * crash between the parquet commit and [[renameNewFragments]]
-    * leaves `part-*` names, which sort AFTER every numeric fragment
-    * (letters > digits) — and since later writes would see them in
-    * `before` and never rename them, the ordering violation would
-    * otherwise become permanent. Rename them into the fragment
-    * sequence (continuing from the highest surviving index, ahead of
-    * this write's new files — they committed earlier, so they keep
-    * the earlier positions). */
-  private def repairStrandedFragments(dirs: Seq[Path]): Unit =
-    listParquet(dirs).foreach { case (dir, files) =>
-      val stranded = files.filterNot(PathUtils.isFragmentName).toSeq.sorted
-      if (stranded.nonEmpty) {
-        var idx = files.filter(PathUtils.isFragmentName)
-          .map(PathUtils.fragmentIndex)
-          .foldLeft(-1)(math.max) + 1
-        stranded.foreach { name =>
-          val (from, to) = (new Path(dir, name), new Path(dir, PathUtils.fragmentName(idx)))
-          require(fs.rename(from, to), s"failed to repair stranded fragment $from to $to")
-          idx += 1
-        }
-      }
-    }
+    idx
+  }
 
   /** Write-time validation, matching hive_dataset.py:358-370:
     * partition columns present, at least one data column, partition
@@ -327,37 +285,33 @@ case class HiveDataset(
     * reference exposes the same knob per write
     * (hive_dataset.py:17,255) but no rewrite verb.
     *
-    * The partition is materialized (localCheckpoint) BEFORE the
-    * overwrite deletes the files being read — storage cost is ONE
-    * partition, which is why this is per-partition: compact a big
-    * dataset partition-by-partition ([[compact]] does exactly that),
-    * never all at once. Returns false when the partition is absent.
-    * Checkpoint blocks are reclaimed at GC (per-call lifetime). */
+    * No snapshot is needed: the write lands in staging, so it has
+    * read every old fragment before the overwrite deletes them.
+    * Returns false when the partition is absent. */
   def compactPartition(values: Map[String, String]): Boolean =
     readPartition(values) match {
       case None => false
       case Some(df) =>
-        write(minimalChunks(df.localCheckpoint()))
+        write(minimalChunks(df))
         true
     }
 
-  /** Compact every partition, one at a time (bounded storage — see
-    * [[compactPartition]]); for an unpartitioned dataset, the whole
-    * table. Returns the number of compacted units. */
+  /** Compact every partition, one at a time; for an unpartitioned
+    * dataset, the whole table. Returns the number of compacted
+    * units. */
   def compact(): Int =
     if (partitionColumns.isEmpty)
-      scan().map { df => write(minimalChunks(df.localCheckpoint())); 1 }.getOrElse(0)
+      scan().map { df => write(minimalChunks(df)); 1 }.getOrElse(0)
     else
       partitions().map(_.toMap).count(compactPartition)
 
-  /** Coalesce a materialized frame to the minimal fragment count
+  /** Coalesce a stored frame to the minimal fragment count
     * (`ceil(rows / maxRowsPerFragment)`). `coalesce` is a NARROW
     * dependency — no shuffle; the write's `maxRecordsPerFile` still
-    * caps any residual imbalance. Reading the count is free on a
-    * checkpointed frame. */
-  private def minimalChunks(snapshot: DataFrame): DataFrame = {
-    val rows = snapshot.count()
-    snapshot.coalesce(
+    * caps any residual imbalance. The count is a column-less scan. */
+  private def minimalChunks(stored: DataFrame): DataFrame = {
+    val rows = stored.count()
+    stored.coalesce(
       math.max(1L, (rows + maxRowsPerFragment - 1) / maxRowsPerFragment).toInt)
   }
 
@@ -376,23 +330,23 @@ case class HiveDataset(
     * leaves its old row behind (include the old partition's rows in
     * `df` to move keys). Key columns must exist in both schemas.
     *
-    * The merged snapshot is materialized (`localCheckpoint`) BEFORE
-    * the overwrite — the anti-join reads the very directories the
-    * write replaces. */
+    * The anti-join reads the very directories the write replaces; the
+    * staged write has read them in full before it deletes any old
+    * fragment, so the merge needs no snapshot. */
   def upsert(df: DataFrame, keyCols: Seq[String]): Unit = {
     require(keyCols.nonEmpty, "keyCols must be non-empty")
     keyCols.foreach(k => require(df.columns.contains(k),
       s"upsert key column '$k' missing from the incoming frame"))
-    val touched: Seq[ListMap[String, String]] =
-      if (partitionColumns.isEmpty) partitions()
+    // an unpartitioned dataset is one partition: the whole table
+    val existing: Seq[DataFrame] =
+      if (partitionColumns.isEmpty) scan().toSeq
       else df.select(partitionColumns.map(col): _*).distinct().collect().toSeq
-        .map { r =>
-          ListMap(partitionColumns.zipWithIndex.map { case (c, i) =>
+        .flatMap { r =>
+          readPartition(partitionColumns.zipWithIndex.map { case (c, i) =>
             require(!r.isNullAt(i), s"Partition column '$c' contains null values")
             c -> r.get(i).toString
-          }: _*)
+          }.toMap)
         }
-    val existing = touched.flatMap(v => readPartition(v.toMap))
     val merged = existing match {
       case Nil => df
       case parts =>
@@ -400,7 +354,7 @@ case class HiveDataset(
         old.join(df.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
           .unionByName(df, allowMissingColumns = true)
     }
-    write(merged.localCheckpoint())
+    write(merged)
   }
 
   /** Recursively delete one partition directory; validates the key

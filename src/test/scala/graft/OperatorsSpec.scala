@@ -2609,6 +2609,31 @@ class OperatorsSpec extends SparkSpec {
     }
   }
 
+  test("pageRank: an empty graph ranks no node; a disjoint seed set fails a require under any ANSI mode") {
+    import spark.implicits._
+    val none = Seq.empty[(String, String)].toDF("s", "d")
+    val selfLoops = Seq(("a", "a"), ("b", "b")).toDF("s", "d")
+    Seq(none, selfLoops).foreach { e =>
+      val global = graft.operators.Components.pageRank(e, "s", "d", iters = 2)
+      assert(global.columns.toSeq == Seq("node", "rank_ppm"))
+      assert(global.collect().isEmpty)
+      val personal = graft.operators.Components
+        .personalizedPageRank(e, "s", "d", Seq("a").toDF("n"), "n", iters = 2)
+      assert(personal.columns.toSeq == Seq("node", "rank_ppm"))
+      assert(personal.collect().isEmpty)
+    }
+    val e = Seq(("a", "h"), ("h", "a")).toDF("s", "d")
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try Seq("true", "false").foreach { mode =>
+      spark.conf.set("spark.sql.ansi.enabled", mode)
+      val ex = intercept[IllegalArgumentException](
+        graft.operators.Components
+          .personalizedPageRank(e, "s", "d", Seq("zz").toDF("n"), "n", 1)
+          .collect())
+      assert(ex.getMessage.contains("seed set is disjoint from the graph"), s"ansi=$mode")
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+  }
+
   test("pageRank: hand-checked star graph; mass flows to the hub; partition-invariant") {
     import spark.implicits._
     // Directed star: three leaves all point at the hub h; h points at a.
